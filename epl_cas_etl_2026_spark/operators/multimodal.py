@@ -2,19 +2,14 @@
 ``binary`` columns with typed metadata (BASELINE.json north star).
 
 The Spark-side machinery here is REAL and tested — schema, Arrow batch
-shape, ``mapInPandas`` signature, partitioning behavior. Decode status
-by format: uncompressed 24-bit BMP and PCM16 WAV decode FOR REAL
-(stdlib struct + numpy — ``decode_image_real`` / ``decode_audio_real``
-below, round-trip-tested against the in-repo encoders, with a
-dead-letter quarantine mode for corrupt payloads); compressed JPEG /
-PNG / GIF / IMA-ADPCM decode FOR REAL since round 8 (operators/
-jpeg.py, png.py, gif.py, adpcm.py); MPEG-1 Audio Layer I decodes FOR
-REAL to the exact subband domain since round 9 (operators/mpeg1.py —
-PCM synthesis alone stays stubbed pending the normative ISO Table
-3-B.3 window, unavailable here). Still honestly stubbed end-to-end:
-MP3 (Layer III Huffman/IMDCT) and H.264 — ``decode_image_meta`` keeps
-the documented deterministic fake for those; swapping it for
-Pillow/av is a one-function change.
+shape, ``mapInPandas`` signature, partitioning behavior. Uncompressed
+24-bit BMP and PCM16 WAV decode FOR REAL (stdlib struct + numpy —
+``decode_image_real`` / ``decode_audio_real`` below, round-trip-tested
+against the in-repo encoders, with a dead-letter quarantine mode for
+corrupt payloads); this is the package's one real media decode path.
+Compressed formats (JPEG, PNG, GIF, ADPCM, MPEG audio, H.264) are not
+decoded: ``decode_image_meta`` keeps the documented deterministic fake
+for them, and swapping it for Pillow/av is a one-function change.
 
 At 100 TB: binary payloads dominate row size, so these operators run
 ``mapInPandas`` (Arrow-batched, streaming per partition — never

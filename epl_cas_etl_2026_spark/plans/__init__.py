@@ -34,38 +34,28 @@ from epl_cas_etl_2026_spark.plans import (
 )
 from epl_cas_etl_2026_spark.plans.gate_policy import gate_order
 
-_ALL_QUERIES = {
-    **relational.QUERIES,
-    **dataprep.QUERIES,
-    **domain_api.QUERIES,
-    **extensions.QUERIES,
-    **lifecycle.QUERIES,
-    **decision_support.QUERIES,
-    **retrieval.QUERIES,
-    **graph.QUERIES,
-    **streaming_gate.QUERIES,
-    **winnow.QUERIES,
-    **sketches.QUERIES,
-    **enrich.QUERIES,
-    **setjoin.QUERIES,
-    **warehouse.QUERIES,
-}
-_ALL_ORACLES = {
-    **relational.ORACLES,
-    **dataprep.ORACLES,
-    **domain_api.ORACLES,
-    **extensions.ORACLES,
-    **lifecycle.ORACLES,
-    **decision_support.ORACLES,
-    **retrieval.ORACLES,
-    **graph.ORACLES,
-    **streaming_gate.ORACLES,
-    **winnow.ORACLES,
-    **sketches.ORACLES,
-    **enrich.ORACLES,
-    **setjoin.ORACLES,
-    **warehouse.ORACLES,
-}
+# Registration order breaks ties in ``gate_order``: keep this sequence.
+_MODULES = (
+    relational,
+    dataprep,
+    domain_api,
+    extensions,
+    lifecycle,
+    decision_support,
+    retrieval,
+    graph,
+    streaming_gate,
+    winnow,
+    sketches,
+    enrich,
+    setjoin,
+    warehouse,
+)
+_ALL_QUERIES: dict = {}
+_ALL_ORACLES: dict = {}
+for _mod in _MODULES:
+    _ALL_QUERIES.update(_mod.QUERIES)
+    _ALL_ORACLES.update(_mod.ORACLES)
 
 _ORDER = gate_order(_ALL_QUERIES, _ALL_ORACLES)
 

@@ -37,21 +37,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
 
 from epl_cas_etl_2026_spark.functions.scalars import det_avg, det_avg_sql
+from epl_cas_etl_2026_spark.plans.registry import registrar
 
 QUERIES: dict = {}
 ORACLES: dict = {}
+_register = registrar(QUERIES, ORACLES)
 
 _run_ids = itertools.count()
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -65,7 +65,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def spread_scan(df: DataFrame, max_target: int = 32) -> DataFrame:
+# Ceiling on spread_scan's target partition count (the core count is
+# the other bound).
+SPREAD_MAX_PARTITIONS = 32
+
+
+def spread_scan(df: DataFrame) -> DataFrame:
     """Round-robin repartition to the core count when a scan is
     under-parallel — the single-row-group local testdata files give
     ONE split, so any per-row-expensive stage pipelined onto the scan
@@ -78,9 +83,10 @@ def spread_scan(df: DataFrame, max_target: int = 32) -> DataFrame:
     (wins: exact-substring grams 2.11→0.42 s, winnow fingerprints,
     DSIR md5 pass, lineitem moments; losses: queries whose map-side
     partial agg already collapses the stream, e.g. market-basket,
-    kneser-ney, gopher)."""
+    kneser-ney, gopher). Round-robin reorders rows, so the helper is
+    safe only ahead of order-insensitive consumers."""
     sc = df.sparkSession.sparkContext
-    target = min(max_target, sc.defaultParallelism)
+    target = min(SPREAD_MAX_PARTITIONS, sc.defaultParallelism)
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

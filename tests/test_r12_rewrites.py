@@ -1,6 +1,7 @@
 """Round-12 rewrite pins: the per-partition union-find pre-contraction
 added inside connected_components (operators/dedup.py) must preserve
-connectivity exactly, partition layout notwithstanding."""
+connectivity exactly, partition layout notwithstanding; spread_scan
+(sources/parquet.py) fires only on under-parallel frames."""
 
 from __future__ import annotations
 
@@ -63,3 +64,23 @@ def test_connected_components_labels_unchanged(spark, chain_and_blobs):
         for r in connected_components(df, "id_a", "id_b").collect()
     }
     assert got == _py_components(edges)
+
+
+def test_spread_scan_leaves_parallel_frame_unchanged(spark):
+    from epl_cas_etl_2026_spark.sources.parquet import spread_scan
+
+    target = min(32, spark.sparkContext.defaultParallelism)
+    for n in (target, target + 3):
+        df = spark.range(0, 200, numPartitions=n)
+        assert spread_scan(df) is df
+
+
+def test_spread_scan_spreads_single_partition_frame(spark):
+    from epl_cas_etl_2026_spark.sources.parquet import spread_scan
+
+    df = spark.range(0, 200, numPartitions=1)
+    spread = spread_scan(df)
+    assert spread.rdd.getNumPartitions() == min(
+        32, spark.sparkContext.defaultParallelism
+    )
+    assert sorted(r.id for r in spread.collect()) == list(range(200))
