@@ -245,11 +245,15 @@ def merge_upsert(
 # ---------------------------------------------------------------------------
 def read_checkpoint(spark: SparkSession, path: str, formulario: str):
     """sync_checkpoints read (etl_sync.py:356-360): latest watermark
-    for a form, None on first sync."""
+    for a form, None on first sync. Read with the schema
+    :func:`advance_checkpoint` writes, so no footer-inference job runs."""
+    from epl_cas_etl_2026_spark.schemas import SYNC_CHECKPOINT_SCHEMA
+
     if not os.path.exists(path):
         return None
     cp = (
-        spark.read.parquet(path)
+        spark.read.schema(SYNC_CHECKPOINT_SCHEMA)
+        .parquet(path)
         .filter(F.col("formulario") == formulario)
         .agg(F.max("ultima_fecha").alias("wm"))
         .collect()[0]["wm"]

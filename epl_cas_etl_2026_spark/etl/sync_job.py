@@ -4,15 +4,21 @@
 One call = one sync run:
 
   1. read the checkpoint high-water mark (T1)
-  2. read landing JSONL, keep records newer than the watermark
-  3. parse nested JSON → typed rows (S9), extract the overall score (F11)
-  4. dedup against the sink on the natural key (J6/T2)
+  2. scan and parse the landing JSONL ONCE (S9): keep records newer
+     than the watermark, compute the overall score in the row (F11)
+     and pin that batch; the new watermark, the dedup and the detail
+     explode all read the pin
+  3. an empty batch over existing sinks loads nothing: skip to step 8
+  4. dedup against the master sink on the natural key (J6/T2) — the
+     sync's ONE sink anti-join
   5. resolve the branch FK via broadcast lookup (J5)
   6. recover missing locations from sibling rows (J8) when a donor
      frame is given (the security-form flow)
-  7. assign the calendar period via the range join (J7/T4)
-  8. append master + exploded detail rows idempotently (S4/S5)
-  9. advance the checkpoint, write the audit row (T7); on error the
+  7. assign the calendar period via the range join (J7/T4), then
+     append master + exploded detail rows (S4/S5); no write when
+     nothing is new and the sinks exist, schema-only sinks on a first
+     run
+  8. advance the checkpoint, write the audit row (T7); on error the
      audit records 'error' and the exception re-raises so an external
      scheduler alerts (reference etl_sync.py:397-404)
 
@@ -33,7 +39,6 @@ from pyspark.sql import functions as F
 
 from epl_cas_etl_2026_spark.etl.pipeline import (
     advance_checkpoint,
-    append_idempotent,
     assign_periodo,
     audit_log,
     dedup_against_sink,
@@ -43,10 +48,12 @@ from epl_cas_etl_2026_spark.etl.pipeline import (
     surrogate_id,
 )
 from epl_cas_etl_2026_spark.etl.zenput import (
-    extract_calificacion_general,
+    calificacion_general,
     extract_detail_items,
     parse_submissions,
 )
+
+_KEY = "zenput_submission_id"
 
 
 def run_incremental_sync(
@@ -71,77 +78,34 @@ def run_incremental_sync(
     audit_path = os.path.join(warehouse_dir, "sync_log")
 
     inicio = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+    batch = None
     try:
         watermark = read_checkpoint(spark, ckpt_path, formulario)
 
-        raw = spark.read.text(landing_dir)
-        subs = parse_submissions(raw)
+        subs = parse_submissions(spark.read.text(landing_dir))
         if watermark is not None:
             subs = subs.filter(F.col("fecha_supervision") > F.lit(watermark))
+        # persist() is safe for this pin: its lineage reads only the
+        # landing dir, which the sync never writes (contrast `fresh`).
+        # The `finally` must release it: a later sync with the same
+        # watermark builds the same plan, and the cache would serve it
+        # this batch, blind to files landed since.
+        batch = subs.withColumn(
+            "calificacion_general", calificacion_general(F.col("answers"))
+        ).persist()
+        n_batch, new_wm = batch.agg(
+            F.count(F.lit(1)), F.max("fecha_supervision")
+        ).first()
 
-        scored = subs.join(
-            extract_calificacion_general(subs), "zenput_submission_id", "left"
-        )
+        sinks_exist = os.path.exists(master_path) and os.path.exists(detail_path)
+        if n_batch == 0 and sinks_exist:
+            n_new = 0
+        else:
+            n_new = _load(
+                spark, batch, master_path, detail_path,
+                sucursales, periodos, catalog, donor_master,
+            )
 
-        existing = (
-            spark.read.parquet(master_path)
-            if os.path.exists(master_path)
-            else None
-        )
-        fresh = dedup_against_sink(scored, existing)
-
-        if donor_master is not None:
-            fresh = recover_location(fresh, donor_master)
-        fresh = resolve_sucursal_fk(fresh, sucursales)
-        fresh = assign_periodo(fresh, periodos)
-
-        # Pin the batch BEFORE mutating the sink. A plain persist() is
-        # NOT enough: Spark's append command refreshes the file-status
-        # cache for master_path and invalidates every cached plan that
-        # reads it — including `fresh`, whose dedup anti-join scans the
-        # master sink. The post-append recompute would then see the
-        # batch's own keys already in the sink (read-your-own-writes)
-        # and silently drop every detail row. localCheckpoint truncates
-        # the lineage so downstream stages reuse the materialized batch
-        # regardless of sink mutations. At production scale the
-        # equivalent is a staging write or Delta MERGE, which snapshots
-        # the sink version instead.
-        fresh = fresh.localCheckpoint(eager=True)
-
-        master = fresh.select(
-            surrogate_id(F.col("zenput_submission_id")).alias("id"),
-            "zenput_submission_id",
-            "sucursal_id",
-            "periodo_id",
-            "supervisor",
-            "fecha_supervision",
-            "calificacion_general",
-            F.col("lat_entrega"),
-            F.col("lon_entrega"),
-        )
-        # prune_col: collisions only ever come from the current extract
-        # window (etl_sync.py:215-217), so the sink-side key scan is
-        # restricted to the batch's date range — a pushed parquet
-        # filter keeps the anti-join build side O(batch), not O(sink)
-        n_new = append_idempotent(
-            spark,
-            master,
-            master_path,
-            "zenput_submission_id",
-            prune_col="fecha_supervision",
-        )
-
-        details = extract_detail_items(fresh, catalog).select(
-            surrogate_id(F.col("zenput_submission_id")).alias("supervision_id"),
-            "item_id",
-            "porcentaje",
-            F.concat_ws(
-                "|", "zenput_submission_id", F.col("item_id").cast("string")
-            ).alias("__detail_key"),
-        )
-        append_idempotent(spark, details, detail_path, "__detail_key")
-
-        new_wm = subs.agg(F.max("fecha_supervision")).collect()[0][0]
         if new_wm is not None:
             advance_checkpoint(spark, ckpt_path, formulario, new_wm)
 
@@ -152,3 +116,81 @@ def run_incremental_sync(
         fin = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
         audit_log(spark, audit_path, formulario, inicio, fin, 0, "error")
         raise
+    finally:
+        if batch is not None:
+            batch.unpersist()
+
+
+def _load(
+    spark: SparkSession,
+    batch: DataFrame,
+    master_path: str,
+    detail_path: str,
+    sucursales: DataFrame,
+    periodos: DataFrame,
+    catalog: DataFrame,
+    donor_master: DataFrame | None,
+) -> int:
+    """Steps 4-7: dedup ``batch`` against the master sink, resolve its
+    keys and append what is new to both sinks; returns rows loaded.
+
+    The one anti-join is the dedup: every key already in the master
+    sink is gone from ``fresh``, and detail rows come only from
+    ``fresh``'s ids, so neither append needs an anti-join of its own.
+    Only the key column of the master sink is read, with the type
+    :func:`parse_submissions` writes it in, so no footer-inference job
+    runs.
+    """
+    existing = (
+        spark.read.schema(f"{_KEY} string").parquet(master_path)
+        if os.path.exists(master_path)
+        else None
+    )
+    fresh = dedup_against_sink(batch, existing)
+
+    if donor_master is not None:
+        fresh = recover_location(fresh, donor_master)
+    fresh = resolve_sucursal_fk(fresh, sucursales)
+    fresh = assign_periodo(fresh, periodos)
+
+    # Pin the batch BEFORE mutating the sink. A plain persist() is
+    # NOT enough: Spark's append command refreshes the file-status
+    # cache for master_path and invalidates every cached plan that
+    # reads it — including `fresh`, whose dedup anti-join scans the
+    # master sink. The post-append recompute would then see the
+    # batch's own keys already in the sink (read-your-own-writes)
+    # and silently drop every detail row. localCheckpoint truncates
+    # the lineage so downstream stages reuse the materialized batch
+    # regardless of sink mutations. At production scale the
+    # equivalent is a staging write or Delta MERGE, which snapshots
+    # the sink version instead.
+    fresh = fresh.localCheckpoint(eager=True)
+    n_new = fresh.count()
+
+    master = fresh.select(
+        surrogate_id(F.col(_KEY)).alias("id"),
+        _KEY,
+        "sucursal_id",
+        "periodo_id",
+        "supervisor",
+        "fecha_supervision",
+        "calificacion_general",
+        F.col("lat_entrega"),
+        F.col("lon_entrega"),
+    )
+    # __detail_key keeps the detail sink's schema as earlier loads
+    # wrote it
+    details = extract_detail_items(fresh, catalog).select(
+        surrogate_id(F.col(_KEY)).alias("supervision_id"),
+        "item_id",
+        "porcentaje",
+        F.concat_ws("|", _KEY, F.col("item_id").cast("string")).alias(
+            "__detail_key"
+        ),
+    )
+    # A zero-row first run still materializes each sink (schema-only
+    # parquet), so readers see an empty table, not PATH_NOT_FOUND.
+    for df, path in ((master, master_path), (details, detail_path)):
+        if n_new or not os.path.exists(path):
+            df.write.mode("append").parquet(path)
+    return n_new

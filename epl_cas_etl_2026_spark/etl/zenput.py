@@ -17,7 +17,7 @@ dict probe.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from epl_cas_etl_2026_spark.functions.scalars import normalize_title
@@ -66,32 +66,43 @@ def formula_answers(submissions: DataFrame) -> DataFrame:
     )
 
 
-def extract_calificacion_general(submissions: DataFrame) -> DataFrame:
-    """F11 — score extraction (etl_sync.py:160-177): the reference
-    iterates the answers array IN ORDER and, per answer, checks the
-    title against both accepted names ('PORCENTAJE %' then
-    'CALIFICACION PORCENTAJE %') — so the FIRST answer matching
-    EITHER title wins; answer position outranks the title list.
-    A null value on that first match is returned as-is (the reference
-    does not skip None here, unlike extract_areas).
+# F11's two accepted titles, compared after upper(trim(title)).
+_SCORE_TITLES = ("PORCENTAJE %", "CALIFICACION PORCENTAJE %")
+
+
+def calificacion_general(answers: Column) -> Column:
+    """F11 — the overall score, computed in the row (etl_sync.py:160-177).
+
+    The reference walks ``answers`` IN ORDER and returns the value of
+    the FIRST formula answer whose title matches EITHER accepted name,
+    so answer position outranks the title list. Here that is one
+    higher-order expression: the first element of
+    ``filter(answers, formula ∧ upper(trim(title)) ∈ _SCORE_TITLES)``,
+    value cast to double. No explode, window or join. A null value on
+    that first match is returned as-is (the reference does not skip
+    None here, unlike extract_areas). A submission with no match, an
+    empty or a missing ``answers`` yields NULL: ``try_element_at``
+    returns NULL past the end, where ``element_at`` raises under ANSI
+    mode.
     """
-    ans = formula_answers(submissions)
-    title_up = F.upper(F.trim(F.col("title")))
-    prioritized = ans.filter(
-        title_up.isin("PORCENTAJE %", "CALIFICACION PORCENTAJE %")
+    hits = F.filter(
+        answers,
+        lambda a: (a["field_type"] == "formula")
+        & F.upper(F.trim(a["title"])).isin(*_SCORE_TITLES),
     )
-    w = Window.partitionBy("zenput_submission_id").orderBy("answer_pos")
-    best = (
-        prioritized.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(
-            "zenput_submission_id",
-            F.col("value").alias("calificacion_general"),
-        )
-    )
-    return submissions.select("zenput_submission_id").distinct().join(
-        best, "zenput_submission_id", "left"
-    )
+    return F.try_element_at(hits, F.lit(1))["value"].cast("double")
+
+
+def extract_calificacion_general(submissions: DataFrame) -> DataFrame:
+    """F11 as a table: one ``(zenput_submission_id,
+    calificacion_general)`` row per id, from :func:`calificacion_general`.
+    Copies of one id in a batch are re-deliveries of the same
+    submission, so whichever copy survives carries the same score.
+    """
+    return submissions.select(
+        "zenput_submission_id",
+        calificacion_general(F.col("answers")).alias("calificacion_general"),
+    ).dropDuplicates(["zenput_submission_id"])
 
 
 def extract_detail_items(

@@ -72,6 +72,9 @@ _GATE_MODULES = {
     "test_attribution_rag",
     "test_pii_scrub",
     "test_layout",
+    # the reference's sync (run_incremental_sync) and its transforms:
+    # without it the default tier runs no sync at all (~100 s at 4 cores)
+    "test_etl_pipeline",
 }
 
 

@@ -6,8 +6,11 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import os
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from epl_cas_etl_2026_spark.etl.pipeline import (
@@ -209,21 +212,14 @@ def test_period_transition(spark):
     assert out2 == {1: True, 2: False}  # not all covered → no transition
 
 
-def test_run_incremental_sync_end_to_end(spark, tmp_path):
-    """The full run_sync lifecycle (SURVEY.md §3.2): load → re-run is a
-    no-op (T2) → late data after the watermark loads incrementally →
-    audit rows accumulate."""
-    from epl_cas_etl_2026_spark.etl.sync_job import run_incremental_sync
+def _sync_dims(spark):
+    """(sucursales, periodos, catalog) for a sync over LOC-001 in
+    February 2026, with the two catalog areas the fixtures answer."""
+    from epl_cas_etl_2026_spark.schemas import SUCURSALES_SCHEMA
 
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    wh = str(tmp_path / "wh")
-    (landing / "p0.jsonl").write_text(
-        "\n".join(json.dumps(_submission(i)) for i in (1, 2)) + "\n"
-    )
     sucursales = spark.createDataFrame(
         [(10, "Centro", "1", "NL", "MTY", 1, True, "local", 25.0, -100.0, "LOC-001")],
-        schema=__import__("epl_cas_etl_2026_spark.schemas", fromlist=["SUCURSALES_SCHEMA"]).SUCURSALES_SCHEMA,
+        schema=SUCURSALES_SCHEMA,
     )
     periodos = spark.createDataFrame(
         [(1, "P1", "Periodo 1", dt.date(2026, 2, 1), dt.date(2026, 2, 28), True)],
@@ -233,6 +229,24 @@ def test_run_incremental_sync_end_to_end(spark, tmp_path):
         [(1, "CF", "CUARTO FRIO", 1), (2, "FR", "FREIDORAS", 2)],
         schema=CATALOGO_SCHEMA,
     )
+    return sucursales, periodos, catalog
+
+
+def _write_landing(path, subs):
+    path.write_text("".join(json.dumps(s) + "\n" for s in subs))
+
+
+def test_run_incremental_sync_end_to_end(spark, tmp_path):
+    """The full run_sync lifecycle (SURVEY.md §3.2): load → re-run is a
+    no-op (T2) → late data after the watermark loads incrementally →
+    audit rows accumulate."""
+    from epl_cas_etl_2026_spark.etl.sync_job import run_incremental_sync
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    wh = str(tmp_path / "wh")
+    _write_landing(landing / "p0.jsonl", [_submission(i) for i in (1, 2)])
+    sucursales, periodos, catalog = _sync_dims(spark)
 
     n1 = run_incremental_sync(spark, str(landing), wh, sucursales, periodos, catalog)
     assert n1 == 2
@@ -549,3 +563,158 @@ def test_append_idempotent_zero_row_first_run_materializes_sink(spark, tmp_path)
     rows = spark.createDataFrame([(1, "a")], "k long, v string")
     assert append_idempotent(spark, rows, path, "k") == 1
     assert spark.read.parquet(path).count() == 1
+
+
+# ---------------------------------------------------------------------------
+# The one-parse sync: in-row score, one anti-join, no empty writes.
+# ---------------------------------------------------------------------------
+_SCORE_NAMES = ("PORCENTAJE %", "CALIFICACION PORCENTAJE %")
+
+
+def _reference_score(answers):
+    """Pure-Python transcription of the reference's score loop
+    (etl_sync.py:160-177): walk the answers in order; the first formula
+    answer whose title is one of the two names gives the score."""
+    for a in answers or []:
+        if a.get("field_type") == "formula" and "PORCENTAJE" in (a.get("title") or "").upper():
+            title = a["title"].strip().upper()
+            for name in _SCORE_NAMES:
+                if title == name:
+                    v = a.get("value")
+                    return float(v) if v is not None else None
+    return None
+
+
+# Titles in stray case and padding. The padding is spaces only: Spark's
+# trim strips spaces, Python's strip() every whitespace character.
+_titles = st.builds(
+    lambda base, case, pad_l, pad_r: pad_l + case(base) + pad_r,
+    st.sampled_from(
+        _SCORE_NAMES
+        + ("CUARTO FRIO PORCENTAJE %", "PORCENTAJE  %", "PORCENTAJE%", "COMENTARIOS")
+    ),
+    st.sampled_from([str.upper, str.lower, str.title, str.swapcase]),
+    st.sampled_from(["", " ", "  "]),
+    st.sampled_from(["", " ", "  "]),
+)
+_answers = st.lists(
+    st.fixed_dictionaries({
+        "field_type": st.sampled_from(["formula", "text", "FORMULA", None]),
+        "title": st.one_of(st.none(), _titles),
+        "value": st.one_of(
+            st.none(), st.integers(0, 10_000).map(lambda n: str(n / 100))
+        ),
+    }),
+    max_size=6,
+)
+# None: no "answers" key at all
+_answer_sets = st.lists(st.one_of(st.none(), _answers), min_size=1, max_size=12)
+
+
+@given(answer_sets=_answer_sets)
+@settings(
+    max_examples=25,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_in_row_score_matches_reference_loop(spark, answer_sets):
+    from epl_cas_etl_2026_spark.etl.zenput import calificacion_general
+
+    docs = []
+    for i, answers in enumerate(answer_sets):
+        sub = _submission(i)
+        if answers is None:
+            del sub["answers"]
+        else:
+            sub["answers"] = answers
+        docs.append((json.dumps(sub),))
+    parsed = parse_submissions(spark.createDataFrame(docs, "value string"))
+    got = {
+        r["zenput_submission_id"]: r["score"]
+        for r in parsed.select(
+            "zenput_submission_id",
+            calificacion_general(F.col("answers")).alias("score"),
+        ).collect()
+    }
+    want = {str(i): _reference_score(a) for i, a in enumerate(answer_sets)}
+    assert got == want
+
+
+def _files_under(path):
+    return {
+        os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs
+    }
+
+
+def _sync_setup(spark, tmp_path, subs):
+    from epl_cas_etl_2026_spark.etl.sync_job import run_incremental_sync
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    _write_landing(landing / "p0.jsonl", subs)
+    wh = str(tmp_path / "wh")
+    dims = _sync_dims(spark)
+    return landing, wh, lambda: run_incremental_sync(spark, str(landing), wh, *dims)
+
+
+def test_sync_loads_submission_without_score_with_null(spark, tmp_path):
+    no_score = _submission(5, answers=[
+        {"field_type": "formula", "title": "CUARTO FRIO PORCENTAJE %", "value": "92.0"},
+        {"field_type": "text", "title": "PORCENTAJE %", "value": "50"},
+    ])
+    _, wh, sync = _sync_setup(spark, tmp_path, [_submission(1), no_score])
+    assert sync() == 2
+    scores = {
+        r["zenput_submission_id"]: r["calificacion_general"]
+        for r in spark.read.parquet(f"{wh}/supervisiones_operativas").collect()
+    }
+    assert scores == {"1": 87.5, "5": None}
+    assert spark.read.parquet(f"{wh}/detalle_operativas").count() == 2
+
+
+def test_sync_after_watermark_reset_loads_nothing(spark, tmp_path):
+    import shutil
+
+    _, wh, sync = _sync_setup(spark, tmp_path, [_submission(i) for i in (1, 2)])
+    assert sync() == 2
+    master, detail = f"{wh}/supervisiones_operativas", f"{wh}/detalle_operativas"
+    counts = (spark.read.parquet(master).count(), spark.read.parquet(detail).count())
+    files = _files_under(master) | _files_under(detail)
+    # the whole landing set re-enters the batch; the anti-join drops it
+    shutil.rmtree(f"{wh}/sync_checkpoints")
+    assert sync() == 0
+    assert (spark.read.parquet(master).count(), spark.read.parquet(detail).count()) == counts
+    assert _files_under(master) | _files_under(detail) == files
+
+
+def test_sync_redelivery_writes_no_sink_file(spark, tmp_path):
+    landing, wh, sync = _sync_setup(spark, tmp_path, [_submission(i) for i in (1, 2)])
+    assert sync() == 2
+    sinks = (f"{wh}/supervisiones_operativas", f"{wh}/detalle_operativas")
+    files = set().union(*map(_files_under, sinks))
+    _write_landing(landing / "p1.jsonl", [_submission(i) for i in (1, 2)])
+    assert sync() == 0
+    assert set().union(*map(_files_under, sinks)) == files
+
+
+def test_empty_first_sync_materializes_both_sinks(spark, tmp_path):
+    _, wh, sync = _sync_setup(spark, tmp_path, [])
+    assert sync() == 0
+    master = spark.read.parquet(f"{wh}/supervisiones_operativas")
+    detail = spark.read.parquet(f"{wh}/detalle_operativas")
+    assert master.count() == 0 and detail.count() == 0
+    assert {"id", "zenput_submission_id", "calificacion_general"} <= set(master.columns)
+    assert {"supervision_id", "item_id", "porcentaje"} <= set(detail.columns)
+    # nothing was seen, so the watermark does not move
+    assert not os.path.exists(f"{wh}/sync_checkpoints")
+
+
+def test_sync_leaves_only_its_checkpointed_batch_cached(spark, tmp_path):
+    _, _, sync = _sync_setup(spark, tmp_path, [_submission(i) for i in (1, 2)])
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+
+    before = set(persistent().keySet())
+    assert sync() == 2
+    # the parsed landing batch is released; what stays is the `fresh`
+    # localCheckpoint, which unpersist() does not free
+    assert len(set(persistent().keySet()) - before) <= 1
